@@ -4,7 +4,10 @@
 Runs the flagship analytical queries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON
 line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+"queries": {name: sec}, "sf": ..., "default_parallelism": ...,
+"master": ..., "codegen": {"compilations": ..., "compile_ms": ...}}.
+`codegen` counts the Janino compilations of the timed loop;
+$SPARK_GRAFT_CPUS defaults to the usable cores.
 
 Each query is fully materialized through the `noop` sink (forces the
 whole plan, no driver collect). At sf0.1 the plans are all-broadcast
@@ -101,6 +104,7 @@ def run_once(sf_dir: str, sf: float) -> dict:
     io_canary = round(min(_io_canary_once() for _ in range(2)), 4)
 
     reps = 1 if os.environ.get("BENCH_ALL") else int(os.environ.get("BENCH_REPS", "2"))
+    compiles0, compile_ns0 = codegen_counters(spark)
     timings: dict[str, float] = {}
     if os.environ.get("BENCH_ALL"):
         # r16 verdict item 5: force each named shared staged frame
@@ -123,6 +127,14 @@ def run_once(sf_dir: str, sf: float) -> dict:
             best = min(best, time.perf_counter() - t0)
         timings[name] = round(best, 4)
 
+    compiles1, compile_ns1 = codegen_counters(spark)
+    codegen = {
+        "compilations": compiles1 - compiles0,
+        "compile_ms": round((compile_ns1 - compile_ns0) / 1e6, 1),
+    }
+    sc = spark.sparkContext
+    default_parallelism, master = sc.defaultParallelism, sc.master
+
     total = round(sum(timings.values()), 4)
     spark.stop()
     out = {
@@ -134,6 +146,9 @@ def run_once(sf_dir: str, sf: float) -> dict:
         "io_canary": io_canary,
         "sf": sf,
         "versions": _versions(),
+        "default_parallelism": default_parallelism,
+        "master": master,
+        "codegen": codegen,
     }
     if os.environ.get("BENCH_ALL"):
         # Cross-round sweep comparability (r14 verdict item 4): state
@@ -155,6 +170,17 @@ def run_once(sf_dir: str, sf: float) -> dict:
             fams[mod] = fams.get(mod, 0.0) + secs
         out["family_sums"] = {m: round(s, 4) for m, s in sorted(fams.items())}
     return out
+
+
+def codegen_counters(spark) -> tuple[int, int]:
+    """(Janino compilations, their total ns) so far in this JVM, from
+    the JVM-wide counters every compile updates. A warm loop that still
+    compiles is missing Spark's compiled-class cache."""
+    jvm = spark._jvm
+    return (
+        jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount(),
+        jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime(),
+    )
 
 
 #: Named shared staged frames (staging.staged_frame keys built by
@@ -304,6 +330,14 @@ def merge_runs(runs: list[dict], sf: float, jvm_reps: int) -> dict:
         "versions": next(
             (r["versions"] for r in runs if "versions" in r), _versions()
         ),
+        # every child is built by the same get_spark call
+        "default_parallelism": runs[0].get("default_parallelism"),
+        "master": runs[0].get("master"),
+        # per child, in "runs" order
+        "codegen": {
+            k: [r.get("codegen", {}).get(k) for r in runs]
+            for k in ("compilations", "compile_ms")
+        },
     }
 
 

@@ -15,8 +15,21 @@ import os
 from pyspark.sql import SparkSession
 
 
+#: Entries in Spark's JVM-wide compiled-class cache
+#: (`spark.sql.codegen.cache.maxEntries`, default 100), sized to the
+#: engine's measured working sets at sf0.001: the 13 dashboard charts
+#: compile about 150 classes, one cold etl_batch pass 241, and a
+#: first sweep of the whole registry (noop writes) 5709. At the default
+#: the LRU thrashes: a warm dashboard pass recompiles ~135 classes and a
+#: second registry sweep 8027. At 8192 the whole registry stays cached
+#: and a second sweep compiles 355 (SCALE.md "Codegen cache").
+CODEGEN_CACHE_MAX_ENTRIES = 8192
+
+
 def default_parallelism() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """`SPARK_GRAFT_CPUS`, else the cores this process may run on."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(cpus) if cpus else len(os.sched_getaffinity(0))
 
 
 def _scratch_dir() -> str:
@@ -42,6 +55,12 @@ def get_spark(
       the DuckDB oracle (naive-UTC semantics).
     - shuffle partitions default to the local core count; on a real
       cluster AQE re-coalesces upward from the initial value.
+    - ANSI mode pinned on (Spark 4's default, set explicitly): an
+      overflowing limb sum or cast raises instead of wrapping silently.
+    - codegen cache sized to CODEGEN_CACHE_MAX_ENTRIES, above the whole
+      registry's working set, so a warm repeat of a query reuses its
+      compiled classes. A static conf: it takes effect only when this
+      call starts the JVM's first session.
     """
     cpus = default_parallelism()
     derby_java_options = (
@@ -56,6 +75,8 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.ansi.enabled", "true")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_MAX_ENTRIES))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
         # testdata events.ts has shipped as TIMESTAMP(NANOS) (vanilla

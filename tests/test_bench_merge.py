@@ -63,3 +63,21 @@ def test_merge_survives_canary_less_children():
     text = json.dumps(m)
     assert "Infinity" not in text
     json.loads(text)
+
+
+def test_merge_carries_parallelism_master_and_codegen():
+    runs = [
+        _run(3.0, {"a": 1.0}, default_parallelism=4, master="local[4]",
+             codegen={"compilations": 2, "compile_ms": 30.5}),
+        _run(2.0, {"a": 0.9}, default_parallelism=4, master="local[4]",
+             codegen={"compilations": 0, "compile_ms": 0.0}),
+        _run(2.5, {"a": 0.8}),  # older child protocol: no stamps
+    ]
+    m = merge_runs(runs, sf=0.1, jvm_reps=3)
+    assert m["default_parallelism"] == 4
+    assert m["master"] == "local[4]"
+    assert m["codegen"] == {
+        "compilations": [2, 0, None],
+        "compile_ms": [30.5, 0.0, None],
+    }
+    json.loads(json.dumps(m))
